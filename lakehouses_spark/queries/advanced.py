@@ -1330,9 +1330,9 @@ def lake_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming APPLY CHANGES INTO (T1/T3/T5 + D4 in one arc): the change
     feed lands in a bronze LakeTable in two time-ordered halves; each drain
-    runs the laketable stream source → per-micro-batch last-change
-    collapse → delete/upsert MERGE routing into the state table
-    (streaming/cdc.py), with the (app_id, batch_id) idempotency guard
+    tails the bronze _tx_log with Spark's file stream → per-micro-batch
+    last-change collapse → delete/upsert MERGE routing into the state
+    table (streaming/cdc.py), with the (app_id, source version) stamp
     making replays exactly-once. The second drain starts from the
     checkpoint and must UPDATE keys the first drain already settled —
     and the final state must still hash-equal the one-shot batch

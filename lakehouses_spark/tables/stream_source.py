@@ -172,13 +172,68 @@ class LakeTableBatchReader(DataSourceReader):
         yield from _read_file_batches(partition.path)
 
 
+def plan_log_tail(table_path: str, start_v: int, end_v: int,
+                  initial: bool = False,
+                  ignore_changes: bool = False) -> list[str]:
+    """Data files (paths relative to the table) a log tail reads for the
+    versions (start_v, end_v] — the one planner behind the `laketable`
+    stream source and streaming APPLY CHANGES (streaming/cdc.py), so their
+    semantics and error messages cannot drift apart.
+
+    ``initial=True`` plans the CURRENT snapshot at ``end_v`` instead (the
+    Delta-source default for a fresh stream: DML in history neither fails
+    nor replays stale files); live merge-on-read tombstones fail it unless
+    ``ignore_changes``. Otherwise every commit in the range contributes its
+    added files, and a commit that removed or deleted rows breaks the
+    append-only contract and fails unless ``ignore_changes`` (then only
+    its added files stream). A commit missing from the range (log cleanup
+    ran past the consumer) fails too: its rows would be skipped silently."""
+    if initial:
+        st = _replay(table_path, version=end_v)
+        if st.tombstones and not ignore_changes:
+            raise RuntimeError(
+                f"{len(st.tombstones)} active merge-on-read "
+                "tombstone(s); the stream source reads whole files — "
+                "set .option('ignoreChanges', 'true') to stream them "
+                "including deleted rows, or materialize_tombstones() "
+                "first"
+            )
+        return list(st.files)
+    have = set(_versions(table_path))
+    missing = [v for v in range(start_v + 1, end_v + 1) if v not in have]
+    if missing:
+        raise RuntimeError(
+            f"commits {missing} of {table_path} are gone (log cleanup ran "
+            f"past v{start_v}, where this consumer stands): their rows "
+            "cannot be streamed; rebuild the consumer from the table's "
+            "current snapshot"
+        )
+    out: list[str] = []
+    for v in range(start_v + 1, end_v + 1):
+        c = _commit(table_path, v)
+        breaking = (
+            c.get("remove") or c.get("tombstone")
+            or c.get("set_tombstones") is not None
+        )
+        if breaking and not ignore_changes:
+            raise RuntimeError(
+                f"commit {v} ({c.get('operation')}) removed or deleted "
+                "rows on the streamed table; set .option("
+                "'ignoreChanges', 'true') to stream only appended files "
+                "(Delta-source semantics)"
+            )
+        out.extend(a["path"] for a in c.get("add") or [])
+    return out
+
+
 class LakeTableStreamReader(DataSourceStreamReader):
     """Plain tail over a LakeTable log. Without `startingVersion` the
     INITIAL batch is the CURRENT snapshot's live files (r10 — the same
     Delta-source default the `deltatable`/`icebergtable` twins follow:
     DML in history streams cleanly, active merge-on-read tombstones gate
     on ignoreChanges); `startingVersion=N` tails per-commit adds from
-    version N instead (0 = the full history replay)."""
+    version N instead (0 = the full history replay). Planning is
+    `plan_log_tail`."""
 
     def __init__(self, table_path: str, ignore_changes: bool = False,
                  starting_version: int | None = None):
@@ -196,45 +251,13 @@ class LakeTableStreamReader(DataSourceStreamReader):
         versions = _versions(self.table_path)
         return {"version": versions[-1] if versions else -1}
 
-    def _added_files(self, start_v: int, end_v: int) -> list[str]:
-        out: list[str] = []
-        for v in _versions(self.table_path):
-            if not (start_v < v <= end_v):
-                continue
-            c = _commit(self.table_path, v)
-            breaking = (
-                c.get("remove") or c.get("tombstone")
-                or c.get("set_tombstones") is not None
-            )
-            if breaking and not self.ignore_changes:
-                raise RuntimeError(
-                    f"commit {v} ({c.get('operation')}) removed or deleted "
-                    "rows on the streamed table; set .option("
-                    "'ignoreChanges', 'true') to stream only appended files "
-                    "(Delta-source semantics)"
-                )
-            out.extend(a["path"] for a in c.get("add") or [])
-        return out
-
     def partitions(self, start: dict, end: dict):
         start_v, end_v = int(start["version"]), int(end["version"])
-        if start_v == -1 and self.starting_version is None:
-            # INITIAL batch = the CURRENT snapshot at end_v; the tail
-            # below then only sees versions > end_v
-            st = _replay(self.table_path, version=end_v)
-            if st.tombstones and not self.ignore_changes:
-                raise RuntimeError(
-                    f"{len(st.tombstones)} active merge-on-read "
-                    "tombstone(s); the stream source reads whole files — "
-                    "set .option('ignoreChanges', 'true') to stream them "
-                    "including deleted rows, or materialize_tombstones() "
-                    "first"
-                )
-            return [
-                FileSlice(str(Path(self.table_path) / rel))
-                for rel in st.files
-            ] or [FileSlice("")]
-        rels = self._added_files(start_v, end_v)
+        rels = plan_log_tail(
+            self.table_path, start_v, end_v,
+            initial=start_v == -1 and self.starting_version is None,
+            ignore_changes=self.ignore_changes,
+        )
         return [FileSlice(str(Path(self.table_path) / rel)) for rel in rels] or [
             FileSlice("")
         ]
